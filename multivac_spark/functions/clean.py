@@ -46,13 +46,6 @@ RE_HYPHENATED = re.compile(r"\S(?=\S*[-]\s)([a-zA-Z-]+)(\s)[A-za-z]+")
 # rdf_extract.py:25-39 preprocessor patterns
 RE_BREAK = re.compile(r"\n+")
 RE_SPACE = re.compile(r"\s+")
-RE_DOC_PARENS = re.compile(r"\(\)[\s,]*")
-RE_DOC_BRACKET = re.compile(r"\[\][\s,]*")
-RE_DOC_ELIPSES = re.compile(r"\.\s\.\s\.")
-
-_SMART_QUOTES = str.maketrans({"‘": "'", "’": "'",
-                               "“": '"', "”": '"',
-                               "–": "-", "—": "-"})
 
 
 _RE_YEAR_GATE = re.compile(r"(?:19|20)\d\d")
@@ -179,18 +172,6 @@ def preprocess_abstract(abstract: str) -> str:
     sents = [_ABS_RE_PRECEDING.sub("", s.strip()).strip()
              for s in split_sentences(abstract)]
     return " ".join(sents).strip()
-
-
-def preprocess_document(doc: str) -> str:
-    """rdf_extract.preprocess_full_document semantics (rdf_extract.py:62-82);
-    smart-quote translation stands in for UnicodeDammit."""
-    doc = doc.translate(_SMART_QUOTES)
-    doc = RE_DOC_PARENS.sub("", doc)
-    doc = RE_DOC_BRACKET.sub("", doc)
-    doc = RE_DOC_ELIPSES.sub("...", doc)
-    doc = RE_BREAK.sub(" ", doc)
-    doc = RE_SPACE.sub(" ", doc)
-    return doc
 
 
 # --- paragraph-level cleaner (src/data/clean_documents.py:19-87) -----------

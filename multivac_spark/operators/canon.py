@@ -446,7 +446,7 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
       banded-LSH similarity join, distributed/driver CC
       (``driver_fastpath_edges`` is passed through, so ``=0`` on both
       knobs forces the fully distributed route end-to-end — the
-      bench_twins.py scale exercise).
+      distributed-twin exercise recorded in BENCH.md).
     """
     n_mentions = mentions.count()
     if n_mentions <= driver_fastpath_mentions:

@@ -21,8 +21,11 @@ from __future__ import annotations
 
 import os
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from . import tables
 
 MANIFEST_SCHEMA = ("run_id string, stage string, attempt_id long, "
                    "partition_id int, row_count long, complete boolean, "
@@ -121,3 +124,19 @@ def run_or_resume(spark: SparkSession, base_dir: str, run_id: str,
         return spark.read.parquet(os.path.join(base_dir, stage))
     return write_stage(spark, build(), base_dir, run_id, stage,
                        partition_by=partition_by)
+
+
+def stager(spark: SparkSession, base_dir: str, run_id: str
+           ) -> Callable[[str, Callable[[], DataFrame]], DataFrame]:
+    """``run_or_resume`` bound to one (base_dir, run_id), as a
+    ``stage(name, build)`` hook for ``pipeline.run_pipeline``. The
+    ``edges`` stage lands in the bucketed layout (tables.bucket_edges)
+    and is read back without its ``rel_bucket`` column."""
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if name == "edges":
+            return run_or_resume(
+                spark, base_dir, run_id, name,
+                lambda: tables.bucket_edges(build()),
+                partition_by="rel_bucket").drop("rel_bucket")
+        return run_or_resume(spark, base_dir, run_id, name, build)
+    return stage

@@ -5,7 +5,8 @@ packages. ``build_pyfiles_zip`` produces the zip; a cluster run is then
 
     spark-submit --py-files multivac_spark.zip job.py
 
-where ``job.py`` imports ``multivac_spark.plans.run.run_materialized``.
+where ``job.py`` calls ``multivac_spark.plans.pipeline.run_materialized``
+(the declared pipeline under the resumable lineage stager).
 """
 
 from __future__ import annotations

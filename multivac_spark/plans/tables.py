@@ -46,6 +46,22 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
     return None
 
 
+def bucket_edges(edges: DataFrame, rel_buckets: int = REL_BUCKETS,
+                 salt_buckets: int = SALT_BUCKETS) -> DataFrame:
+    """edges(head_id, tail_id, rel_id) → the parquet bucketed layout,
+    ready for ``partitionBy("rel_bucket")``: a derived ``rel_bucket``
+    column, a (bucket, salt) repartition and an in-partition sort."""
+    salt = F.pmod(F.hash("head_id", "tail_id", "rel_id"),
+                  F.lit(salt_buckets))
+    return (edges
+            .withColumn("rel_bucket",
+                        F.pmod(F.hash("rel_id"), F.lit(rel_buckets)))
+            # (bucket, salt) repartition: a hot predicate spreads over
+            # salt_buckets writers instead of pinning one
+            .repartition(F.col("rel_bucket"), salt)
+            .sortWithinPartitions("rel_id", "head_id", "tail_id"))
+
+
 def write_edges(spark: SparkSession, edges: DataFrame, base: str,
                 name: str = "edges",
                 rel_buckets: int = REL_BUCKETS,
@@ -61,16 +77,8 @@ def write_edges(spark: SparkSession, edges: DataFrame, base: str,
         return ident
 
     path = os.path.join(base, name)
-    salt = F.pmod(F.hash("head_id", "tail_id", "rel_id"),
-                  F.lit(salt_buckets))
-    out = (edges
-           .withColumn("rel_bucket",
-                       F.pmod(F.hash("rel_id"), F.lit(rel_buckets)))
-           # (bucket, salt) repartition: a hot predicate spreads over
-           # salt_buckets writers instead of pinning one
-           .repartition(F.col("rel_bucket"), salt)
-           .sortWithinPartitions("rel_id", "head_id", "tail_id"))
-    out.write.mode("overwrite").partitionBy("rel_bucket").parquet(path)
+    (bucket_edges(edges, rel_buckets, salt_buckets)
+     .write.mode("overwrite").partitionBy("rel_bucket").parquet(path))
     return path
 
 

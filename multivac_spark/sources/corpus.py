@@ -471,11 +471,3 @@ def embeddings_df(spark):
     rows = vocab.embedding_rows()
     pdf = pd.DataFrame(rows, columns=["token", "vector"])
     return spark.createDataFrame(pdf, schema="token string, vector array<float>")
-
-
-def write_corpus(spark, out_dir: str, sf: float) -> None:
-    n = n_docs_for_sf(sf)
-    (documents_df(spark, n)
-     .write.mode("overwrite").parquet(f"{out_dir}/documents.parquet"))
-    (embeddings_df(spark)
-     .write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet"))

@@ -2,13 +2,14 @@
 the same run_id reproduces identical tables without recomputing, and no
 duplicate lineage rows appear for completed stages."""
 
+import os
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from multivac_spark.plans.pipeline import PipelineConfig
-from multivac_spark.plans.run import run_materialized
+from multivac_spark.plans.pipeline import (STAGE_POINTS, PipelineConfig,
+                                           run_materialized, run_pipeline)
 from multivac_spark.sources import corpus
 
 
@@ -47,6 +48,14 @@ def test_pipeline_end_to_end(spark, first_run):
     n_mentions = tables["entity_clusters"].count()
     n_clusters = tables["entity_clusters"].select("label").distinct().count()
     assert n_clusters < n_mentions
+
+
+def test_every_stage_point_written(out_dir, first_run):
+    for name in STAGE_POINTS:
+        assert os.path.exists(os.path.join(out_dir, name, "_SUCCESS")), name
+    # edges land in the bucketed layout (plans/tables.bucket_edges)
+    assert any(p.startswith("rel_bucket=")
+               for p in os.listdir(os.path.join(out_dir, "edges")))
 
 
 def test_resume_reproduces_identical_tables(spark, out_dir, first_run):
@@ -112,3 +121,20 @@ def test_crash_retry_converges(spark):
                                     lambda: (calls2.append(1), df)[1])
         assert calls2 == []
         assert got.count() == 100
+
+
+def test_staged_run_honours_config(spark, first_run, tmp_path):
+    """The resumable stager runs the same declared chain as the lazy
+    one, so a non-default config reaches the materialized tables too
+    (expand_mentions was once dropped on the staged path)."""
+    tables, base_cfg = first_run
+    docs = corpus.documents_df(spark, 120, partitions=4)
+    emb = corpus.embeddings_df(spark)
+    cfg = PipelineConfig(top_n_ent=base_cfg.top_n_ent,
+                         top_n_rel=base_cfg.top_n_rel,
+                         expand_mentions="chunks")
+    lazy = _rows(run_pipeline(spark, docs, emb, cfg)["final_triples"])
+    # the config changes the output, so equality below is not vacuous
+    assert lazy != _rows(tables["final_triples"])
+    staged = run_materialized(spark, docs, emb, str(tmp_path), "runC", cfg)
+    assert _rows(staged["final_triples"]) == lazy
